@@ -9,18 +9,20 @@ exactly the artifact the datapipe docstrings promise — ``(id, cell,
 codes, vec)`` bucketed by cell — and serves query batches against it
 with PARTITION PRUNING doing the work of the inverted file: a query
 batch probing ``p`` distinct cells reads only those ``p`` parquet
-partitions, never the corpus.
+partitions, never the corpus. The layout, tombstone and compaction
+contract shared with the dedup indexes is in
+:mod:`~renoir_spark.index_core`; this kind's relations:
 
-Layout at ``path`` (all parquet, self-describing):
-
-    meta/   one row: id_col, vec_col, n_cells, nprobe-independent dims
-    grid/   one row: __mins, __scales (the SQ8 per-dim [min,max] grid)
-    cells/  n_cells rows: cell id + unit centroid
-    codes/  corpus: id, vec (fp32 for the exact rerank), __codes
-            (SQ8, ints 0..255 in-grid — parquet bit-packs to ~1 B/dim;
-            int not smallint so out-of-grid APPENDED vectors can't
-            overflow),
-            hive-partitioned by __cell
+    grid/        one row: __mins, __scales (the SQ8 per-dim [min,max] grid)
+    cells/       n_cells rows: cell id + unit centroid
+    codes/       corpus: id, vec (fp32 for the exact rerank), __codes
+                 (SQ8, ints 0..255 in-grid — parquet bit-packs to ~1
+                 B/dim; int not smallint so out-of-grid APPENDED vectors
+                 can't overflow), __gen (0 = build, 1 = appended),
+                 hive-partitioned by __cell
+    tombstones/  (id, __cell): hive-partitioned by the deleted row's
+                 cell, so a probe prunes it with its own probed-cell
+                 filter
 
 Query results are IDENTICAL to ``ann_cosine(method="ivf_sq8")`` with
 the same parameters: the same seeded centroids (smallest-id vectors of
@@ -33,16 +35,10 @@ Scale notes (100 TB): build is one bounded driver collect (n_cells
 seed rows), one map-side-combined stats aggregate, and ONE
 encode+assign pass over the corpus (Arrow block-matrix cell assignment
 + JVM codec expressions, no shuffle) feeding a partitioned write.
-Query never touches unprobed partitions: up to PROBE_LITERAL_MAX
-probed cells are collected to the driver (bounded) and pushed as a
-LITERAL partition filter into the codes scan — the reader lists only
-those directories; a wider probe (big query batches × nprobe over
-many cells) switches to a broadcast semi-join on the partition column
-and dynamic partition pruning prunes the same listing at runtime, so
-no unbounded literal list ever reaches the plan (util.
-prune_partitions). The rerank joins the candidate list (|queries| ×
-rerank rows, broadcast) against the SAME pruned scan, so fp32 vectors
-of unprobed cells are never read either.
+Query never touches unprobed partitions (the index_core probe
+contract over the probed cells). The rerank joins the candidate list
+(|queries| × rerank rows, broadcast) against the SAME pruned scan, so
+fp32 vectors of unprobed cells are never read either.
 
 Reference parity: renoir has no persisted-index operator; this is part
 of the beyond-reference similarity-search layer (SURVEY.md §2.12) in
@@ -52,12 +48,12 @@ re-expressed as parquet + partition pruning instead of a custom format.
 
 from __future__ import annotations
 
-import math
 from typing import Optional
 
 from pyspark.sql import functions as F
 
 from .datapipe import (
+    _cosine,
     _exact_rerank_topk,
     _ivf_assign,
     _ivf_probe,
@@ -68,19 +64,39 @@ from .datapipe import (
     _sq8_stats,
     _sq8_xhat,
     auto_cells,
+    md5_int31,
 )
-from .util import prune_partitions, run_concurrent, tiny_df
+from .index_core import PersistedIndex, _load_meta, _Staged
+from .util import free_local_checkpoint, prune_partitions, tiny_df
+
+_GRID = "__mins array<double>, __scales array<double>"
 
 
-class AnnIndex:
+class AnnIndex(PersistedIndex):
     """Handle over a persisted IVF+SQ8 index directory. Construct via
     :func:`ann_index_build` or :func:`ann_index_load`."""
 
+    MODE = "ivf_sq8"
+    RELATIONS = {
+        "codes": ("{id_col} {id_type}, {vec_col} {vec_type}, "
+                  "__codes array<int>, __gen int, __cell long", "__cell"),
+    }
+    TOMBSTONES = ("{id_col} {id_type}, __cell long", "__cell")
+
     def __init__(self, spark, path: str, meta: dict, units: list):
-        self.spark = spark
-        self.path = path
-        self.meta = meta
+        super().__init__(spark, path, meta)
         self.units = units
+
+    @property
+    def _id(self) -> str:
+        return self.meta["id_col"]
+
+    @property
+    def _dirs(self) -> int:
+        return max(self.meta["n_cells"], 1)
+
+    def _grid(self):
+        return self.spark.read.schema(_GRID).parquet(f"{self.path}/grid")
 
     # -------------------------------------------------------------- #
     def query(self, queries, *, k: int = 3, nprobe: int = 4,
@@ -103,78 +119,66 @@ class AnnIndex:
                     "cos double, rank long",
                 )
             )
-        # persisted because TWO consumers execute it: the probed-cell
-        # partition collect below AND the final candidate/rerank plan —
-        # unpersisted, the batch's upstream lineage (often an opaque
-        # Arrow stage: the probe itself is mapInPandas, and composed
-        # callers feed decode/transform chains) runs TWICE per query
-        # call. Batch-sized, not corpus-sized; released at stream
-        # teardown via _retain (the DedupIndex.match_batch discipline).
-        q = _ivf_probe(
-            queries.df.select(
-                F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-            ),
-            self.units, nprobe=nprobe,
-            out_schema=f"qid {qdt[id_col]}, qvec {qdt[vec_col]}, __cell long",
-        ).persist()
-        # The probed-cell set IS the index lookup: a bounded driver
-        # collect (≤ PROBE_LITERAL_MAX + 1 ints) decides between a
-        # LITERAL partition filter (small probes — the listing itself
-        # is pruned) and a broadcast semi-join whose dynamic partition
-        # pruning does the same prune at runtime (wide probes — a
-        # million-query batch over thousands of cells never inlines a
-        # huge literal list). See util.prune_partitions.
-        # Explicit schema: no directory-listing inference (an index
-        # built over an empty corpus has no data files), and the
-        # partition column reads back long, not the discovered int.
-        codes, cells = prune_partitions(
-            self.spark.read.schema(self._codes_schema())
-            .parquet(f"{self.path}/codes"),
-            "__cell",
-            q.select("__cell"),
-        )
-        # tombstoned ids must not occupy candidate/top-k slots (a
-        # post-top-k filter would silently under-return k) — anti-join
-        # the DELETED set out of the pruned scan. The tombstone read is
-        # pruned by the SAME probed cells: the literal cell list is
-        # reused when the codes prune collected one, else the same
-        # DPP semi-join shape.
-        tombs = self._tombstones_read()
-        if tombs is not None:
-            if cells is not None:
-                tombs = tombs.filter(F.col("__cell").isin(cells))
-            else:
-                tombs = tombs.join(
-                    F.broadcast(
-                        q.select("__cell").distinct()
-                        .filter(F.col("__cell") >= F.lit(-(1 << 63)))
-                    ),
-                    "__cell", "left_semi",
+        with _Staged() as stage:
+            # staged because TWO consumers execute it: the probed-cell
+            # partition collect below AND the final candidate/rerank
+            # plan — unpersisted, the batch's upstream lineage (often
+            # an opaque Arrow stage: the probe itself is mapInPandas,
+            # and composed callers feed decode/transform chains) runs
+            # TWICE per query call. Batch-sized, not corpus-sized.
+            q = stage(_ivf_probe(
+                queries.df.select(
+                    F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+                ),
+                self.units, nprobe=nprobe,
+                out_schema=(f"qid {qdt[id_col]}, qvec {qdt[vec_col]}, "
+                            "__cell long"),
+            ))
+            # The probed-cell set IS the index lookup (the index_core
+            # probe contract: literal cell filter or DPP semi-join).
+            codes, cells = prune_partitions(
+                self._read("codes"), "__cell", q.select("__cell")
+            )
+            # tombstoned ids must not occupy candidate/top-k slots (a
+            # post-top-k filter would silently under-return k) —
+            # anti-join the DELETED set out of the pruned scan. The
+            # tombstone read is pruned by the SAME probed cells: the
+            # literal cell list is reused when the codes prune
+            # collected one, else the same DPP semi-join shape.
+            tombs = self._tombstones()
+            if tombs is not None:
+                if cells is not None:
+                    tombs = tombs.filter(F.col("__cell").isin(cells))
+                else:
+                    tombs = tombs.join(
+                        F.broadcast(
+                            q.select("__cell").distinct()
+                            .filter(F.col("__cell") >= F.lit(-(1 << 63)))
+                        ),
+                        "__cell", "left_semi",
+                    )
+                codes = codes.join(
+                    tombs.select(id_col), id_col, "left_anti"
                 )
-            codes = codes.join(
-                tombs.select(id_col), id_col, "left_anti"
+            enc = (
+                codes.crossJoin(F.broadcast(self._grid()))
+                .select(
+                    id_col, "__cell",
+                    F.col(vec_col).alias("cvec"),
+                    _sq8_xhat().alias("__xhat"),
+                )
             )
-        grid = self.spark.read.schema(
-            "__mins array<double>, __scales array<double>"
-        ).parquet(f"{self.path}/grid")
-        enc = (
-            codes.crossJoin(F.broadcast(grid))
-            .select(
-                id_col, "__cell",
-                F.col(vec_col).alias("cvec"),
-                _sq8_xhat().alias("__xhat"),
+            cand = _sq8_candidates(
+                enc.select(id_col, "__cell", "__xhat"), q,
+                id_col=id_col, rerank=rerank,
+                join=lambda c, bq: c.join(bq, "__cell"),
             )
-        )
-        cand = _sq8_candidates(
-            enc.select(id_col, "__cell", "__xhat"), q,
-            id_col=id_col, rerank=rerank,
-            join=lambda c, bq: c.join(bq, "__cell"),
-        )
-        corpus = queries._new(
-            enc.select(F.col(id_col), F.col("cvec").alias(vec_col))
-        )
-        return _exact_rerank_topk(corpus, cand, vec_col=vec_col,
-                                  id_col=id_col, k=k)._retain(q)
+            corpus = queries._new(
+                enc.select(F.col(id_col), F.col("cvec").alias(vec_col))
+            )
+            return stage.retain(_exact_rerank_topk(
+                corpus, cand, vec_col=vec_col, id_col=id_col, k=k
+            ))
 
     # -------------------------------------------------------------- #
     def append(self, stream) -> None:
@@ -198,64 +202,24 @@ class AnnIndex:
                 "AnnIndex.append: cannot append into an index built "
                 "over an empty corpus (no cells to assign to) — rebuild"
             )
-        stats = self.spark.read.schema(
-            "__mins array<double>, __scales array<double>"
-        ).parquet(f"{self.path}/grid")
         # storage dtype is fixed at build time: appending a wider vector
         # type (array<double> into a float index) would write parquet
         # files later reads reject (PARQUET_COLUMN_DATA_TYPE_MISMATCH) —
         # coerce to the index's vec_type up front
         vec = F.col(self.meta["vec_col"]).cast(self.meta["vec_type"])
-        _write_codes(
-            stream.df.withColumn(self.meta["vec_col"], vec),
-            self.path, self.units, stats,
-            id_col=self.meta["id_col"], vec_col=self.meta["vec_col"],
-            id_type=self.meta["id_type"], n_cells=self.meta["n_cells"],
-            mode="append", gen=1,
-        )
+        _write_codes(self, stream.df.withColumn(self.meta["vec_col"], vec),
+                     self._grid(), mode="append", gen=1)
 
-    # -------------------------------------------------------------- #
-    def _tombstones_read(self):
-        """Explicit-schema read of the tombstone relation (``None``
-        when no delete ever ran — indexes built before delete support
-        keep working)."""
-        from .dedup_index import _dir_exists
-
-        if not _dir_exists(self.spark, f"{self.path}/tombstones"):
-            return None
-        return self.spark.read.schema(
-            f"{self.meta['id_col']} {self.meta['id_type']}, __cell long"
-        ).parquet(f"{self.path}/tombstones")
-
-    def delete_batch(self, ids) -> None:
-        """TAKEDOWN support — remove vectors from the served index by
-        id (copyright/PII removal is an ingest-loop fact of life;
-        ``corpus_diff`` already computes removed ids). Deletion is a
-        TOMBSTONE, not a rewrite: one maintenance scan of the codes
-        recovers each deleted id's cell, and the (id, cell) rows land
-        hive-partitioned by cell — so every probe prunes the tombstone
-        read with the SAME probed-cell filter as the codes scan and
-        anti-joins it out (:meth:`query`). The physical rows disappear
-        at :meth:`compact` / :meth:`rebuild`, which fold tombstones in
-        and clear them; ``stats()["tombstones"]`` is the compaction
-        signal. Idempotent: re-deleting an id adds a duplicate
-        tombstone row (harmless for an anti-join, folded at compact).
-        ``ids`` — a Stream or DataFrame carrying the index's id
-        column; extra columns are ignored."""
-        df = ids.df if hasattr(ids, "df") else ids
+    def _tombstone_rows(self, df):
+        """One maintenance scan of the codes recovers each deleted id's
+        cell: the (id, cell) tombstones land hive-partitioned by cell,
+        so every probe prunes the tombstone read with the SAME
+        probed-cell filter as the codes scan (:meth:`query`)."""
         id_col = self.meta["id_col"]
         keys = df.select(F.col(id_col)).distinct()
-        codes = self.spark.read.schema(self._codes_schema()).parquet(
-            f"{self.path}/codes"
-        )
-        rows = codes.join(keys, id_col, "left_semi").select(
+        return self._read("codes").join(keys, id_col, "left_semi").select(
             id_col, "__cell"
         )
-        # takedown batches are small: one task, ≈one file per touched
-        # cell directory (the append file-discipline)
-        rows.repartition(1).write.mode("append").partitionBy(
-            "__cell"
-        ).parquet(f"{self.path}/tombstones")
 
     # -------------------------------------------------------------- #
     def match_batch(self, batch, *, threshold: float = 0.9,
@@ -267,17 +231,14 @@ class AnnIndex:
         than an all-hits scan by construction: only the top neighbor
         can decide a dedup verdict, and rank 1 carries the maximum
         cosine."""
-        id_col = self.meta["id_col"]
         top = self.query(batch, k=1, nprobe=nprobe, rerank=rerank)
-        pairs = top.df.filter(
+        return top._new(top.df.filter(
             F.col("cos") >= F.lit(float(threshold))
         ).select(
             F.col("qid").alias("batch_id"),
-            F.col(id_col).alias("corpus_id"),
+            F.col(self.meta["id_col"]).alias("corpus_id"),
             "cos",
-        )
-        # carry the query's staged relations so teardown releases them
-        return batch._new(pairs)._retain(*top._retained)
+        ))
 
     def dedup_batch(self, batch, *, threshold: float = 0.9,
                     nprobe: int = 4, rerank: int = 12):
@@ -286,18 +247,16 @@ class AnnIndex:
         increment against the accumulated corpus without re-encoding
         it, then :meth:`append` the survivors. Same loop as
         :meth:`DedupIndex.dedup_batch`, in embedding space."""
-        id_col = self.meta["id_col"]
-        matched = self.match_batch(
+        return self._dedup(batch, self.match_batch(
             batch, threshold=threshold, nprobe=nprobe, rerank=rerank
-        )
-        dup = matched.df.select(
-            F.col("batch_id").alias(id_col)
-        ).distinct()
-        return batch._new(
-            batch.df.join(dup, id_col, "left_anti")
-        )._retain(*matched._retained)
+        ))
 
     # -------------------------------------------------------------- #
+    def _counts(self) -> dict:
+        # stored rows, tombstoned included — the delta vs live rows is
+        # the compaction signal
+        return {"vectors": self._read("codes").count()}
+
     def stats(self, *, drift_sample: int = 1024) -> dict:
         """Diagnostic scan: indexed vector count, data-file count (the
         compaction signal), and the CENTROID-DRIFT signal (the rebuild
@@ -319,27 +278,14 @@ class AnnIndex:
         ratio is the measured form of "time to rebuild" (measured on a
         shifted append in tools/recall_harness.py). ``appended`` is
         None while nothing has been appended."""
-        from .datapipe import _cosine, md5_int31
-        from .dedup_index import _count_files
-
-        codes = self.spark.read.schema(self._codes_schema()).parquet(
-            f"{self.path}/codes"
-        )
-        n = codes.count()
-        tombs = self._tombstones_read()
-        out = {
-            "mode": "ivf_sq8",
-            "vectors": n,  # stored rows, tombstoned included — the
-            #               delta vs live rows is the compaction signal
-            "tombstones": 0 if tombs is None else tombs.count(),
-            "cells": self.meta["n_cells"],
-            "files": _count_files(self.spark, self.path, ("codes",)),
-            "drift": {"build": None, "appended": None,
-                      "mean_ratio": None},
-        }
+        out = super().stats()
+        out["cells"] = self.meta["n_cells"]
+        out["drift"] = {"build": None, "appended": None, "mean_ratio": None}
+        n = out["vectors"]
         if not self.units or n == 0:
             return out
         id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
+        codes = self._read("codes")
         cells = self.spark.createDataFrame(
             [(i, u) for i, u in enumerate(self.units)],
             "__cell long, __unit array<double>",
@@ -431,20 +377,13 @@ class AnnIndex:
         Returns the rebuilt handle; ``self`` is stale after this call
         (its meta/units describe the overwritten layout)."""
         from .context import StreamContext
-        from .util import free_local_checkpoint
-
-        from .dedup_index import _overwrite_empty
 
         id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
-        live = (
-            self.spark.read.schema(self._codes_schema())
-            .parquet(f"{self.path}/codes")
-            .select(id_col, vec_col)
-        )
         # tombstones fold in: a rebuild re-derives everything from the
         # LIVE rows only, and the cleared tombstone relation resets the
         # per-probe anti-join cost (same contract as compact)
-        tombs = self._tombstones_read()
+        tombs = self._tombstones()
+        live = self._read("codes").select(id_col, vec_col)
         if tombs is not None:
             live = live.join(
                 tombs.select(id_col).distinct(), id_col, "left_anti"
@@ -457,60 +396,15 @@ class AnnIndex:
                 dim=self.meta["dim"], seed_order="hash", refine=refine,
             )
             if tombs is not None:
-                _overwrite_empty(
-                    self.spark, f"{self.path}/tombstones",
-                    f"{id_col} {self.meta['id_type']}, __cell long",
-                    "__cell",
-                )
+                self._reset("tombstones")
             return out
         finally:
             free_local_checkpoint(rows)
 
-    def compact(self) -> None:
-        """Rewrite the codes root clustered (≈ one file per cell
-        directory): every append adds a file per touched cell, and a
-        nightly ingest loop accumulates files that tax each probe's
-        listing/open path — periodic compaction restores the
-        fresh-build layout without re-encoding anything (codes are
-        rewritten as stored; centroids/grid untouched). TOMBSTONES are
-        folded in: deleted rows are dropped from the rewrite and the
-        tombstone relation is cleared, so the per-probe anti-join cost
-        resets to zero."""
-        from .dedup_index import (
-            _overwrite_empty,
-            _rewrite_clustered,
-        )
 
-        id_col = self.meta["id_col"]
-        tombs = self._tombstones_read()
-        _rewrite_clustered(
-            self.spark, f"{self.path}/codes", self._codes_schema(),
-            "__cell", max(self.meta["n_cells"], 1),
-            minus=None if tombs is None
-            else tombs.select(id_col).distinct(),
-            minus_col=id_col,
-        )
-        if tombs is not None:
-            _overwrite_empty(
-                self.spark, f"{self.path}/tombstones",
-                f"{id_col} {self.meta['id_type']}, __cell long",
-                "__cell",
-            )
-
-    def _codes_schema(self) -> str:
-        return (
-            f"{self.meta['id_col']} {self.meta['id_type']}, "
-            f"{self.meta['vec_col']} {self.meta['vec_type']}, "
-            "__codes array<int>, __gen int, __cell long"
-        )
-
-
-def _write_codes(df, path: str, units, stats, *, id_col: str,
-                 vec_col: str, id_type: str, n_cells: int,
-                 mode: str, gen: int = 0) -> None:
-    """One encode+assign pass → the codes relation, clustered on the
-    cell before the partitioned write (an unclustered write opens a
-    file per task per directory — the dedup-index small-file lesson).
+def _write_codes(idx, df, grid, *, mode: str, gen: int = 0) -> None:
+    """One encode+assign pass → ``idx``'s codes relation, clustered on
+    the cell (PersistedIndex._write).
 
     ``gen`` stamps the rows' generation (0 = build corpus, 1 =
     appended): the drift diagnostic in :meth:`AnnIndex.stats` compares
@@ -518,12 +412,13 @@ def _write_codes(df, path: str, units, stats, *, id_col: str,
     the build corpus's own fit. Indexes written before the column
     existed read back NULL (explicit-schema parquet reads tolerate a
     missing column) and count as build rows."""
+    id_col, vec_col = idx.meta["id_col"], idx.meta["vec_col"]
     enc = (
         _ivf_assign(
             df.select(F.col(id_col), F.col(vec_col).alias("cvec")),
-            units, id_schema=f"{id_col} {id_type}",
+            idx.units, id_schema=f"{id_col} {idx.meta['id_type']}",
         )
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(grid))
         .select(
             id_col,
             F.col("cvec").alias(vec_col),
@@ -541,9 +436,7 @@ def _write_codes(df, path: str, units, stats, *, id_col: str,
             "__cell",
         )
     )
-    enc.repartition(max(n_cells, 1), "__cell").write.mode(
-        mode
-    ).partitionBy("__cell").parquet(f"{path}/codes")
+    idx._write("codes", enc, mode)
 
 
 def ann_index_build(stream, path: str, *, vec_col: str = "embedding",
@@ -587,29 +480,19 @@ def ann_index_build(stream, path: str, *, vec_col: str = "embedding",
     centroids are not re-derivable by the static SQL ``cells`` CTE, so
     suite-pinned builds keep ``refine=0``."""
     spark = stream.df.sparkSession
-    df = stream.df.select(F.col(id_col), F.col(vec_col))
     dtypes = dict(stream.df.dtypes)
-    # decode-once (datapipe._staged_probe), EVERY path: the optional √N
-    # dial, the seed collect, the SQ8 stats pass and the codes write
-    # all read the same narrow (id, vec) relation — unpersisted, a
-    # PINNED-cells build ran that upstream lineage three separate times
-    # (seed collect, stats collect, encode+write; four with the dial).
-    # Released before return — the build is eager, every consumer runs
-    # inside this call.
-    from .datapipe import _staged_probe
-
-    if n_cells is None:
-        staged, n = _staged_probe(df, lambda d: d.count())
-        n_cells = auto_cells(n)
-    else:
-        staged = df.persist()
-    df = staged
-    # try/finally over the WHOLE build body (ADVICE round 10): a
-    # failure in the codes/grid/cells/meta writes (disk full,
-    # permissions) must not leak the staged relation for the life of
-    # the session any more than a seed/stats failure; unpersist is
-    # idempotent, so the success path needs no special casing.
-    try:
+    # decode-once (the datapipe._staged_probe discipline), EVERY path:
+    # the optional √N dial, the seed collect, the SQ8 stats pass and
+    # the codes write all read the same staged narrow (id, vec)
+    # relation — unpersisted, a PINNED-cells build ran that upstream
+    # lineage three separate times (seed collect, stats collect,
+    # encode+write; four with the dial). Released before return — the
+    # build is eager, every consumer runs inside this block — and on
+    # ANY failure, the writes included.
+    with _Staged() as stage:
+        df = stage(stream.df.select(F.col(id_col), F.col(vec_col)))
+        if n_cells is None:
+            n_cells = auto_cells(df.count())
         units = _ivf_seed_units(df, vec_col, id_col, n_cells,
                                 order=seed_order)
         if refine:
@@ -621,61 +504,36 @@ def ann_index_build(stream, path: str, *, vec_col: str = "embedding",
         # grid/ write — without this the unpersisted aggregate would
         # scan the corpus twice (once under enc.write, once for grid)
         srow = _sq8_stats(df, vec_col, dim).collect()[0]
-        stats = tiny_df(
-            spark,
-            [(srow["__mins"], srow["__scales"])],
-            "__mins array<double>, __scales array<double>",
-        )
-
-        meta = {
+        grid = tiny_df(spark, [(srow["__mins"], srow["__scales"])], _GRID)
+        idx = AnnIndex(spark, path, {
             "id_col": id_col,
             "vec_col": vec_col,
             "n_cells": n_cells,
             "dim": dim,
             "id_type": dtypes[id_col],
             "vec_type": dtypes[vec_col],
-        }
-        # the codes write and the grid/cells/meta metadata writes (one
-        # task, one file each — util.tiny_df) touch disjoint paths and
-        # share no ordering: overlapped (util.run_concurrent), the
-        # build pays the codes write's wall plus ~one commit latency
-        # instead of four stacked latencies (guide §2.6 — the tiny
-        # writes back-fill whatever the codes write leaves idle).
-        run_concurrent(
-            lambda: _write_codes(df, path, units, stats, id_col=id_col,
-                                 vec_col=vec_col, id_type=dtypes[id_col],
-                                 n_cells=n_cells, mode="overwrite"),
-            lambda: stats.write.mode("overwrite").parquet(f"{path}/grid"),
+        }, units)
+        # the codes write overlaps the grid/cells/meta writes (one
+        # task, one file each — util.tiny_df): the build pays the codes
+        # write's wall plus ~one commit latency instead of four stacked
+        # latencies (guide §2.6 — the tiny writes back-fill whatever
+        # the codes write leaves idle).
+        idx._create(
+            lambda: _write_codes(idx, df, grid, mode="overwrite"),
+            lambda: grid.write.mode("overwrite").parquet(f"{path}/grid"),
             lambda: tiny_df(
                 spark, [(i, u) for i, u in enumerate(units)],
                 "cell long, unit array<double>",
             ).write.mode("overwrite").parquet(f"{path}/cells"),
-            lambda: tiny_df(
-                spark,
-                [(id_col, vec_col, n_cells, dim, dtypes[id_col],
-                  dtypes[vec_col])],
-                "id_col string, vec_col string, n_cells long, dim long, "
-                "id_type string, vec_type string",
-            ).write.mode("overwrite").parquet(f"{path}/meta"),
         )
-    finally:
-        staged.unpersist()
-    return AnnIndex(spark, path, meta, units)
+    return idx
 
 
 def ann_index_load(spark, path: str) -> AnnIndex:
     """Open a persisted index: reads the 1-row meta and the n_cells
     centroid rows (bounded driver collects); the codes stay on disk
     until a query probes them."""
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
-    meta = {
-        "id_col": m["id_col"],
-        "vec_col": m["vec_col"],
-        "n_cells": int(m["n_cells"]),
-        "dim": int(m["dim"]),
-        "id_type": m["id_type"],
-        "vec_type": m["vec_type"],
-    }
+    meta = _load_meta(spark, path)
     rows = (
         spark.read.schema("cell long, unit array<double>")
         .parquet(f"{path}/cells").orderBy("cell").collect()

@@ -142,9 +142,11 @@ def run_concurrent(*thunks) -> None:
     pure commit latency (file create + rename), so running them
     sequentially stacks that latency while the cluster idles — at ANY
     scale, since the cost is per-write, not per-byte. Callers must
-    ensure the thunks share no path and no ordering dependency. The
-    first raised exception propagates after every thunk has settled
-    (no half-submitted pool teardown)."""
+    ensure the thunks share no path and no ordering dependency.
+    Failures surface after every thunk has settled (no half-submitted
+    pool teardown) and no cause is dropped: a single failure re-raises
+    that exception unchanged (callers still see its type), two or more
+    raise an ``ExceptionGroup`` of all of them."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -158,8 +160,13 @@ def run_concurrent(*thunks) -> None:
                 f.result()
             except BaseException as e:  # noqa: BLE001 - resurfaced below
                 errs.append(e)
-        if errs:
+        if len(errs) == 1:
             raise errs[0]
+        if errs:
+            raise BaseExceptionGroup(
+                f"run_concurrent: {len(errs)} of {len(thunks)} actions "
+                "failed", errs,
+            )
 
 
 # -------------------------------------------------------------------- #

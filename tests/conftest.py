@@ -1,4 +1,5 @@
 import os
+import sys
 
 import pytest
 from pyspark.sql import SparkSession
@@ -77,3 +78,38 @@ def duck_to_sorted_tuples(con, sql, ndigits=6):
             )
         )
     return sorted(out, key=lambda t: tuple(str(x) for x in t))
+
+
+# -------------------------------------------------------------------- #
+# persisted-index test helpers
+# -------------------------------------------------------------------- #
+
+def layout(spark, path):
+    """{relation dir: (schema read back, partition columns)}."""
+    out = {}
+    for sub in sorted(os.listdir(path)):
+        d = f"{path}/{sub}"
+        parts = sorted({x.split("=")[0] for x in os.listdir(d) if "=" in x})
+        out[sub] = (spark.read.parquet(d).schema.simpleString(), parts)
+    return out
+
+
+def persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def fail_after_prune(monkeypatch):
+    """Make every index-side ``prune_partitions`` run its key collect —
+    which materializes the staged batch relation — and then raise."""
+    from renoir_spark import util
+
+    real = util.prune_partitions
+
+    def boom(*a, **k):
+        real(*a, **k)
+        raise RuntimeError("probe failed (injected)")
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("renoir_spark")
+                and getattr(mod, "prune_partitions", None) is real):
+            monkeypatch.setattr(mod, "prune_partitions", boom)

@@ -7,6 +7,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import fail_after_prune, layout, persisted_rdds
+
 
 @pytest.fixture(scope="module")
 def idx_path(ctx, sf_dir, tmp_path_factory):
@@ -274,3 +276,126 @@ def test_auto_dial_n_cells_sqrt_rule(ctx, spark, tmp_path):
     want = sorted(map(tuple,
                       ctx.ann_index(pinned).query(q, k=3, nprobe=3).df.collect()))
     assert got == want and len(got) > 0
+
+
+# ------------------------------------------------------------------ #
+# tombstones: delete -> probe misses, compact/rebuild fold
+# ------------------------------------------------------------------ #
+
+def _ring(ctx, n):
+    """2-d ring vectors: deterministic, distinct neighborhoods."""
+    import math
+
+    rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0)]) for i in range(n)]
+    return ctx.from_df(
+        ctx.spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    )
+
+
+def test_ann_index_tombstone_roundtrip(ctx, tmp_path):
+    from renoir_spark.ann_index import ann_index_load
+
+    emb = _ring(ctx, 40)
+    path = str(tmp_path / "aidx")
+    emb.ann_index_build(path, n_cells=4, dim=2)
+    idx = ann_index_load(ctx.spark, path)
+    q = emb.filter("vec_id = 10")
+    top = sorted(
+        (r.rank, r.vec_id)
+        for r in idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()
+    )
+    # ring neighbors 9 and 11 tie at rank 1/2 (id tiebreak), then 8
+    assert [v for _, v in top] == [9, 11, 8]
+    # delete the query vector and one of its nearest neighbors
+    idx.delete_batch(emb.filter("vec_id IN (10, 11)"))
+    assert idx.stats()["tombstones"] == 2
+    top2 = sorted(
+        (r.rank, r.vec_id)
+        for r in idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()
+    )
+    top2 = [v for _, v in top2]
+    assert len(top2) == 3 and 10 not in top2 and 11 not in top2
+    # 11's slot backfills with the next ring neighbor, k stays full
+    assert top2 == [9, 8, 12]
+    # compact folds; results unchanged, counters reset
+    idx.compact()
+    st = idx.stats()
+    assert st["tombstones"] == 0 and st["vectors"] == 38
+    assert [r.vec_id for r in
+            idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()] == top2
+
+
+def test_ann_index_rebuild_folds_tombstones(ctx, tmp_path):
+    from renoir_spark.ann_index import ann_index_load
+
+    emb = _ring(ctx, 30)
+    path = str(tmp_path / "ridx")
+    emb.ann_index_build(path, n_cells=4, dim=2)
+    idx = ann_index_load(ctx.spark, path)
+    idx.delete_batch(emb.filter("vec_id < 5"))
+    idx2 = idx.rebuild(n_cells=4)
+    st = idx2.stats()
+    assert st["vectors"] == 25 and st["tombstones"] == 0
+    got = {r.vec_id for r in
+           idx2.query(emb.filter("vec_id = 20"), k=5).collect_vec()}
+    assert got.isdisjoint({0, 1, 2, 3, 4})
+
+
+# ------------------------------------------------------------------ #
+# on-disk format and legacy read paths, pinned
+# ------------------------------------------------------------------ #
+
+ANN_FORMAT = {
+    "meta": ("struct<id_col:string,vec_col:string,n_cells:bigint,"
+             "dim:bigint,id_type:string,vec_type:string>", []),
+    "grid": ("struct<__mins:array<double>,__scales:array<double>>", []),
+    "cells": ("struct<cell:bigint,unit:array<double>>", []),
+    "codes": ("struct<vec_id:bigint,embedding:array<float>,"
+              "__codes:array<int>,__gen:int,__cell:int>", ["__cell"]),
+    "tombstones": ("struct<vec_id:bigint,__cell:int>", ["__cell"]),
+}
+
+
+def test_ann_on_disk_format_and_legacy_reads(ctx, tmp_path):
+    from renoir_spark.util import free_local_checkpoint
+
+    emb = _ring(ctx, 20)
+    idx = emb.ann_index_build(str(tmp_path / "fmt"), n_cells=4, dim=2)
+    q = emb.filter("vec_id IN (3, 4)")
+    # no delete ever ran: no tombstones/ directory — it still probes,
+    # reports stats and compacts
+    assert layout(ctx.spark, idx.path) == {
+        k: v for k, v in ANN_FORMAT.items() if k != "tombstones"
+    }
+    assert idx.query(q, k=2).df.count() == 4
+    assert idx.stats()["tombstones"] == 0
+    idx.compact()
+    assert not os.path.exists(f"{idx.path}/tombstones")
+    idx.delete_batch(q)
+    assert layout(ctx.spark, idx.path) == ANN_FORMAT
+    assert not {r.vec_id for r in idx.query(q, k=2).df.collect()} & {3, 4}
+
+    # codes written before the __gen column existed count as build rows
+    codes = ctx.spark.read.parquet(f"{idx.path}/codes").drop("__gen")
+    pinned = codes.localCheckpoint(eager=True)
+    pinned.write.mode("overwrite").partitionBy("__cell").parquet(
+        f"{idx.path}/codes")
+    free_local_checkpoint(pinned)
+    assert "__gen" not in ctx.spark.read.parquet(f"{idx.path}/codes").columns
+    drift = ctx.ann_index(idx.path).stats()["drift"]
+    assert drift["build"]["n"] == 20 and drift["appended"] is None
+
+
+# ------------------------------------------------------------------ #
+# failure-clean staging: a mid-query failure leaks no persisted
+# relation and surfaces the original exception
+# ------------------------------------------------------------------ #
+
+def test_query_failure_releases_staged(ctx, tmp_path, monkeypatch):
+    emb = _ring(ctx, 20)
+    idx = emb.ann_index_build(str(tmp_path / "q"), n_cells=4, dim=2)
+    n0 = persisted_rdds(ctx.spark)
+    fail_after_prune(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.query(emb.filter("vec_id < 3"), k=2)
+    assert persisted_rdds(ctx.spark) == n0

@@ -332,175 +332,6 @@ def test_text_embed_codec_registry_contract(ctx):
 
 
 # ------------------------------------------------------------------ #
-# Index tombstones: build -> delete -> probe misses, compact folds
-# ------------------------------------------------------------------ #
-
-def _doc_rows(ctx, n=40):
-    return ctx.spark.createDataFrame(
-        [(i, "tombstone corpus document %d content body" % (i % 10))
-         for i in range(n)],
-        "doc_id long, text string",
-    )
-
-
-def test_dedup_index_tombstone_roundtrip(ctx, tmp_path):
-    from renoir_spark.dedup_index import dedup_index_load
-
-    corpus = ctx.from_df(_doc_rows(ctx, 40))           # texts repeat %10
-    batch = ctx.from_df(
-        ctx.spark.createDataFrame(
-            [(100, "tombstone corpus document 3 content body"),
-             (101, "tombstone corpus document 7 content body"),
-             (102, "completely different text with no match at all")],
-            "doc_id long, text string",
-        )
-    )
-    path = str(tmp_path / "didx")
-    corpus.dedup_index_build(path, text_col="text", id_col="doc_id",
-                             bucket_dirs=8)
-    idx = dedup_index_load(ctx.spark, path)
-    # before delete: 100 and 101 are dups of indexed docs
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} == {102}
-    # delete EVERY copy of text 3's duplicate set (ids 3,13,23,33)
-    idx.delete_batch(corpus.filter("doc_id % 10 = 3"))
-    assert idx.stats()["tombstones"] == 4
-    surv = {r.doc_id for r in idx.dedup_batch(batch).collect_vec()}
-    assert surv == {100, 102}      # 100 un-suppressed, 101 still drops
-    # compact folds the tombstones into the physical layout
-    docs_before = idx.stats()["docs"]
-    idx.compact()
-    st = idx.stats()
-    assert st["tombstones"] == 0
-    assert st["docs"] == docs_before - 4
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} \
-        == {100, 102}
-
-
-def test_exact_index_tombstone_roundtrip(ctx, tmp_path):
-    from renoir_spark.dedup_index import dedup_index_load
-
-    corpus = ctx.from_df(_doc_rows(ctx, 20))
-    batch = ctx.from_df(
-        ctx.spark.createDataFrame(
-            [(200, "tombstone corpus document 5 content body"),
-             (201, "nothing like the corpus whatsoever")],
-            "doc_id long, text string",
-        )
-    )
-    path = str(tmp_path / "eidx")
-    corpus.dedup_index_build(path, text_col="text", id_col="doc_id",
-                             bucket_dirs=8, mode="exact")
-    idx = dedup_index_load(ctx.spark, path)
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} == {201}
-    idx.delete_batch(corpus.filter("doc_id % 10 = 5"))
-    assert idx.stats()["tombstones"] == 2
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} \
-        == {200, 201}
-    idx.compact()
-    st = idx.stats()
-    assert st["tombstones"] == 0
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} \
-        == {200, 201}
-
-
-def test_phash_index_tombstone_roundtrip(ctx, tmp_path):
-    from pyspark.sql import functions as F
-
-    from renoir_spark.dedup_index import phash_index_load
-
-    def decoded(df):
-        return (
-            ctx.from_df(df)
-            .map(doc_id=F.col("doc_id"),
-                 content=F.encode(F.col("text"), "UTF-8"))
-            .decode_image(n_features=48)
-        )
-
-    corpus = decoded(_doc_rows(ctx, 20))
-    batch = decoded(ctx.spark.createDataFrame(
-        [(300, "tombstone corpus document 8 content body"),
-         (301, "totally novel media payload")],
-        "doc_id long, text string",
-    ))
-    path = str(tmp_path / "pidx")
-    corpus.phash_index_build(path, id_col="doc_id", bits=48,
-                             bucket_dirs=8)
-    idx = phash_index_load(ctx.spark, path)
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} == {301}
-    idx.delete_batch(corpus.filter("doc_id % 10 = 8"))
-    assert idx.stats()["tombstones"] == 2
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} \
-        == {300, 301}
-    idx.compact()
-    st = idx.stats()
-    assert st["tombstones"] == 0
-    assert {r.doc_id for r in idx.dedup_batch(batch).collect_vec()} \
-        == {300, 301}
-
-
-def test_ann_index_tombstone_roundtrip(ctx, tmp_path):
-    import math
-
-    from renoir_spark.ann_index import ann_index_load
-
-    # 2-d ring vectors: deterministic, distinct neighborhoods
-    rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0)])
-            for i in range(40)]
-    emb = ctx.from_df(
-        ctx.spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    )
-    path = str(tmp_path / "aidx")
-    emb.ann_index_build(path, n_cells=4, dim=2)
-    idx = ann_index_load(ctx.spark, path)
-    q = emb.filter("vec_id = 10")
-    top = sorted(
-        (r.rank, r.vec_id)
-        for r in idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()
-    )
-    # ring neighbors 9 and 11 tie at rank 1/2 (id tiebreak), then 8
-    assert [v for _, v in top] == [9, 11, 8]
-    # delete the query vector and one of its nearest neighbors
-    idx.delete_batch(emb.filter("vec_id IN (10, 11)"))
-    assert idx.stats()["tombstones"] == 2
-    top2 = sorted(
-        (r.rank, r.vec_id)
-        for r in idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()
-    )
-    top2 = [v for _, v in top2]
-    assert len(top2) == 3 and 10 not in top2 and 11 not in top2
-    # 11's slot backfills with the next ring neighbor, k stays full
-    assert top2 == [9, 8, 12]
-    # compact folds; results unchanged, counters reset
-    idx.compact()
-    st = idx.stats()
-    assert st["tombstones"] == 0 and st["vectors"] == 38
-    assert [r.vec_id for r in
-            idx.query(q, k=3, nprobe=4, rerank=12).collect_vec()] == top2
-
-
-def test_ann_index_rebuild_folds_tombstones(ctx, tmp_path):
-    import math
-
-    from renoir_spark.ann_index import ann_index_load
-
-    rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0)])
-            for i in range(30)]
-    emb = ctx.from_df(
-        ctx.spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    )
-    path = str(tmp_path / "ridx")
-    emb.ann_index_build(path, n_cells=4, dim=2)
-    idx = ann_index_load(ctx.spark, path)
-    idx.delete_batch(emb.filter("vec_id < 5"))
-    idx2 = idx.rebuild(n_cells=4)
-    st = idx2.stats()
-    assert st["vectors"] == 25 and st["tombstones"] == 0
-    got = {r.vec_id for r in
-           idx2.query(emb.filter("vec_id = 20"), k=5).collect_vec()}
-    assert got.isdisjoint({0, 1, 2, 3, 4})
-
-
-# ------------------------------------------------------------------ #
 # dedup_minhash_stream bucket_cap: bounded state under boilerplate flood
 # ------------------------------------------------------------------ #
 

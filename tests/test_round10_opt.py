@@ -1,8 +1,8 @@
 # Round-10 OPTIMIZATION regression tests: the changes are
 # performance-only, so these pin the *mechanisms* (single-partition
-# metadata writes, scale-adaptive compute spread, the dedup→append
-# signature-reuse handshake) while the oracle suite pins that results
-# never moved.
+# metadata writes, scale-adaptive compute spread; the dedup→append
+# signature-reuse handshake is in test_dedup_index.py) while the
+# oracle suite pins that results never moved.
 
 import glob
 
@@ -48,73 +48,6 @@ def test_cell_partitioned_width_caps_at_cells_and_conf(ctx):
     assert (
         _cell_partitioned(df, "c", 10 ** 6).rdd.getNumPartitions() == sp
     )
-
-
-# ------------------------------------------------------------------ #
-# dedup → append signature-reuse handshake
-# ------------------------------------------------------------------ #
-
-def _media_rows(ctx, ids):
-    return ctx.from_df(
-        ctx.spark.createDataFrame(
-            [(i, "media item %d body" % (i % 7)) for i in ids],
-            "doc_id long, text string",
-        ).withColumn("content", F.encode("text", "UTF-8"))
-    )
-
-
-def test_phash_append_after_dedup_does_not_redecode(ctx, tmp_path):
-    """The documented ingest loop (dedup_batch → append) must decode
-    each increment exactly once: the append derives the survivors' sig
-    from the cached batch sig instead of re-running the codec."""
-    from renoir_spark import multimodal
-    from renoir_spark.dedup_index import phash_index_load
-
-    marker = str(tmp_path / "decodes.txt")
-
-    def codec(data, n_features=None):
-        with open(marker, "a") as f:
-            f.write("1\n")
-        return multimodal._decode_image_fake(
-            bytes(data), n_features or 8
-        )
-
-    def n_decodes():
-        try:
-            with open(marker) as f:
-                return sum(1 for _ in f)
-        except OSError:
-            return 0
-
-    multimodal.register_codec("image", codec)
-    try:
-        corpus = _media_rows(ctx, range(20)).decode_image(n_features=16)
-        # half novel content, half duplicating the corpus: the append
-        # must band only the novel survivors — without re-decoding
-        b1 = ctx.from_df(
-            ctx.spark.createDataFrame(
-                [(100 + i, "novel item %d body" % i) for i in range(15)]
-                + [(200 + i, "media item %d body" % (i % 7))
-                   for i in range(10)],
-                "doc_id long, text string",
-            ).withColumn("content", F.encode("text", "UTF-8"))
-        ).decode_image(n_features=16)
-        path = str(tmp_path / "pidx")
-        corpus.phash_index_build(path, id_col="doc_id", bits=16,
-                                 bands=4, bucket_dirs=4)
-        idx = phash_index_load(ctx.spark, path)
-        s1 = idx.dedup_batch(b1)
-        n_surv = s1.df.count()
-        assert 0 < n_surv < 25        # real drops AND real survivors
-        n_after_dedup = n_decodes()
-        idx.append(s1)
-        assert n_decodes() == n_after_dedup, (
-            "append re-ran the decode codec for the increment"
-        )
-        # and the appended postings are exactly the survivors'
-        assert idx.stats()["items"] == 20 + n_surv
-    finally:
-        multimodal.reset_codecs()
 
 
 def test_decode_image_columns_projection(ctx):
@@ -185,41 +118,3 @@ def test_sq8_staging_releases_cache_on_unpersist(ctx):
     out.unpersist()
     assert out._retained == []
     assert jsc.getPersistentRDDs().size() == n0
-
-
-def test_dedup_append_handshake_equals_recompute(ctx, tmp_path):
-    """Appending survivors via the cached-sig handshake must leave the
-    index byte-equivalent (same posting/shingle ROWS) to appending a
-    handshake-stripped copy of the same survivors."""
-    from renoir_spark.dedup_index import dedup_index_load
-
-    docs = ctx.from_df(
-        ctx.spark.createDataFrame(
-            [(i, "handshake doc %d words body extra" % (i % 9))
-             for i in range(45)],
-            "doc_id long, text string",
-        )
-    )
-    corpus = docs.filter("doc_id % 3 != 0")
-    b1 = docs.filter("doc_id % 3 = 0")
-
-    def run(strip_handshake, sub):
-        path = str(tmp_path / sub)
-        corpus.dedup_index_build(path, text_col="text",
-                                 id_col="doc_id", bucket_dirs=4)
-        idx = dedup_index_load(ctx.spark, path)
-        s1 = idx.dedup_batch(b1, threshold=0.7)
-        if strip_handshake:
-            del s1._index_sig
-        idx.append(s1)
-        bk = idx._buckets_read()
-        sh = idx._shingles_read()
-        return (
-            sorted(map(tuple, bk.select("bidx", "bhash", "id").collect())),
-            sorted(
-                (r["id"], tuple(sorted(r["sh"])))
-                for r in sh.select("id", "sh").collect()
-            ),
-        )
-
-    assert run(False, "with_hs") == run(True, "no_hs")

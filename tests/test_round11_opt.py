@@ -1,8 +1,8 @@
 # Round-11 OPTIMIZATION regression tests: performance-only changes, so
 # these pin the *mechanisms* (the scan-shape guard on the partition
-# probe, the parameter-checked append handshake, the columns= typo
-# guard, the build-failure cache release) while the oracle suite pins
-# that results never moved.
+# probe, the columns= typo guard, the build-failure cache release;
+# the parameter-checked append handshake is in test_dedup_index.py)
+# while the oracle suite pins that results never moved.
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,53 +47,6 @@ def test_spread_skips_exchange_shaped_inputs_unchanged(ctx):
     narrow = ctx.spark.range(0, 1000, 1, 1)
     target = ctx.spark.sparkContext.defaultParallelism
     assert _spread_for_compute(narrow).rdd.getNumPartitions() >= target
-
-
-# ------------------------------------------------------------------ #
-# dedup→append handshake: path match alone is not enough — an index
-# REBUILT at the same path with different signature params must not
-# ingest a sig computed under the old params (ADVICE round 10)
-# ------------------------------------------------------------------ #
-
-def test_append_handshake_rejects_param_mismatch(ctx, tmp_path):
-    from renoir_spark.dedup_index import (
-        dedup_index_build,
-        dedup_index_load,
-    )
-
-    rows = ctx.from_df(
-        ctx.spark.createDataFrame(
-            [(i, "alpha beta gamma delta %d" % (i % 5)) for i in range(40)],
-            "doc_id long, text string",
-        )
-    )
-    corpus = ctx.from_df(rows.df.filter("doc_id % 2 = 0"))
-    batch = ctx.from_df(rows.df.filter("doc_id % 2 = 1"))
-
-    path = str(tmp_path / "idx")
-    dedup_index_build(corpus, path, text_col="text", id_col="doc_id",
-                      bucket_dirs=4)
-    idx = dedup_index_load(ctx.spark, path)
-    surv = idx.dedup_batch(batch, threshold=0.7)
-    assert getattr(surv, "_index_sig", None) is not None
-
-    # rebuild the SAME path with different signature params: the stale
-    # handshake must be rejected (append recomputes under the new meta)
-    dedup_index_build(corpus, path, text_col="text", id_col="doc_id",
-                      num_hashes=8, bands=2, shingle_n=2, bucket_dirs=4)
-    idx2 = dedup_index_load(ctx.spark, path)
-    from renoir_spark.dedup_index import _sig_for_append, _sig_token
-
-    sentinel = object()
-    got = _sig_for_append(idx2, surv, lambda: sentinel)
-    assert got is sentinel  # fell back to compute(), not the stale sig
-
-    # and the live index still accepts its own handshake
-    surv2 = idx2.dedup_batch(batch, threshold=0.7)
-    assert surv2._index_sig[0] == path
-    assert surv2._index_sig[1] == _sig_token(idx2)
-    got2 = _sig_for_append(idx2, surv2, lambda: sentinel)
-    assert got2 is surv2._index_sig[2]
 
 
 # ------------------------------------------------------------------ #

@@ -226,38 +226,6 @@ def test_dedup_phash_properties(ctx, feats, max_hamming):
     assert sorted(r.id for r in twice.df.collect()) == kept
 
 
-def test_phash_index_probe_partition_pruned(ctx, tmp_path):
-    # the 100 TB probe contract, same as DedupIndex: a small batch's
-    # posting read must carry the batch's __bk set as a PARTITION
-    # filter (directory pruning), not a row filter over every file
-    lo, hi = 0.1, 0.9
-    corpus = ctx.from_df(ctx.spark.createDataFrame(
-        [(i, [hi if (i >> j) & 1 else lo for j in range(8)])
-         for i in range(16)],
-        "doc_id long, image_features array<float>",
-    ))
-    idx = corpus.phash_index_build(
-        str(tmp_path / "pruned"), features_col="image_features",
-        bits=8, bands=4, bucket_dirs=8,
-    )
-    batch = ctx.from_df(ctx.spark.createDataFrame(
-        [(100, [hi, lo, hi, lo, hi, lo, hi, lo])],
-        "doc_id long, image_features array<float>",
-    ))
-    plan = (
-        idx.match_batch(batch, max_hamming=1)
-        .df._jdf.queryExecution().executedPlan().toString()
-    )
-    # the only parquet scan in a match_batch plan IS the postings read
-    # (the batch side is a LocalTableScan); pytest's deep tmp_path can
-    # truncate the Location string, so don't key on the path
-    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
-    assert scans, plan
-    for s in scans:
-        assert "PartitionFilters" in s
-        assert "__bk" in s.split("PartitionFilters")[1].split("]")[0]
-
-
 # ------------------------------------------------------------------ #
 # dedup_video_phash: the aligned-frame majority vote
 # ------------------------------------------------------------------ #
@@ -302,54 +270,6 @@ def test_dedup_video_phash_majority_vote(ctx):
         assert kept2 == [1]
     finally:
         multimodal.reset_codecs()
-
-
-# ------------------------------------------------------------------ #
-# PhashIndex: persisted media dedup (mechanics beyond the qa47 oracle)
-# ------------------------------------------------------------------ #
-
-def test_phash_index_roundtrip_mechanics(ctx, tmp_path):
-    from renoir_spark.dedup_index import phash_index_load
-
-    lo, hi = 0.1, 0.9
-    base = [hi, lo] * 4
-    corpus = ctx.from_df(ctx.spark.createDataFrame(
-        [(1, base), (2, [lo, hi] * 4)],
-        "doc_id long, image_features array<float>",
-    ))
-    idx = corpus.phash_index_build(
-        str(tmp_path / "pidx"), features_col="image_features",
-        bits=8, bands=4, bucket_dirs=4,
-    )
-    st = idx.stats()
-    assert st["mode"] == "phash" and st["items"] == 2
-    assert st["postings"] == 2 * 4  # one row per (item, band)
-    # reload from disk: same verdicts
-    idx = phash_index_load(ctx.spark, str(tmp_path / "pidx"))
-    batch = ctx.from_df(ctx.spark.createDataFrame(
-        [(10, base),            # exact signature match -> dropped
-         (11, [lo] * 8),        # constant features: sig 11111111 (all
-                                # >= mean) -> hamming 4 from base -> kept
-         (12, None)],           # no decoded evidence -> kept
-        "doc_id long, image_features array<float>",
-    ))
-    pairs = idx.match_batch(batch, max_hamming=1).df.collect()
-    assert {(r.batch_id, r.corpus_id, r.hamming) for r in pairs} == {(10, 1, 0)}
-    s1 = idx.dedup_batch(batch, max_hamming=1)
-    assert sorted(r.doc_id for r in s1.df.collect()) == [11, 12]
-    # append survivors: a copy of 11's features now drowns
-    idx.append(s1)
-    assert idx.stats()["items"] == 3  # NULL-featured 12 contributes none
-    batch2 = ctx.from_df(ctx.spark.createDataFrame(
-        [(20, [lo] * 8)], "doc_id long, image_features array<float>",
-    ))
-    assert idx.dedup_batch(batch2, max_hamming=1).df.count() == 0
-    # compact keeps verdicts
-    idx.compact()
-    assert idx.dedup_batch(batch2, max_hamming=1).df.count() == 0
-    # empty batch short-circuits (no index scan)
-    empty = batch.filter("doc_id < 0")
-    assert idx.dedup_batch(empty).df.count() == 0
 
 
 # ------------------------------------------------------------------ #

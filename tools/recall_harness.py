@@ -262,8 +262,7 @@ def main(argv: list[str]) -> int:
     )
     def _largest_cell(idx):
         return (
-            idx.spark.read.schema(idx._codes_schema())
-            .parquet(f"{idx.path}/codes")
+            idx._read("codes")
             .groupBy("__cell").count().agg(F.max("count")).first()[0]
         )
 
